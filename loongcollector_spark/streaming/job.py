@@ -239,32 +239,6 @@ def session_counts(
     )
 
 
-def start_windowed_counts(
-    routed: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "1 hour",
-    available_now: bool = False,
-):
-    agg = windowed_counts(routed, window, watermark)
-    flat = agg.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        "route",
-        "n_rows",
-        "n_tok_sum",
-    )
-    w = (
-        flat.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    w = w.trigger(availableNow=True) if available_now else w.trigger(processingTime="10 seconds")
-    return w.start()
-
-
 def windowed_cms(
     events: DataFrame,
     item_col: str = "user_id",

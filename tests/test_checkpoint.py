@@ -169,3 +169,71 @@ def test_stage_name_validated(tmp_path):
         log.record("run_", "x", 0, 0, [])  # trailing '_' run_id collides
     log.record("run1", "stage-ok.v2", 1, 2, [])
     assert log.stages("run1") == ["stage-ok.v2"]
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, seq_path, tmp_path_factory):
+    """One uninterrupted run, kept on disk for the resume tests."""
+    out = str(tmp_path_factory.mktemp("clean") / "job")
+    return out, run_job(spark, seq_path, out, run_id="clean")
+
+
+def test_route_without_rows_commits_empty_sink(spark, seq_path, tmp_path):
+    """A configured route no row matches still commits its sink: an empty
+    table with zero counts, which a rerun reports unchanged."""
+    from loongcollector_spark.operators.route import RouteRule
+    from loongcollector_spark.plans.pipeline import DEFAULT_ROUTES
+
+    out = str(tmp_path / "jobe")
+    routes = DEFAULT_ROUTES + [RouteRule("no_such_source", "sink_unmatched")]
+    res = run_job(spark, seq_path, out, run_id="re", routes=routes)
+    assert res["counts"]["sink_unmatched"] == {"n_rows": 0, "n_tok_sum": 0}
+    assert spark.read.parquet(res["sinks"]["sink_unmatched"]).count() == 0
+    assert CheckpointLog(out + "/_checkpoint").read("re", "sink_sink_unmatched")["n_rows"] == 0
+    assert sum(v["n_rows"] for v in res["counts"].values()) == 5000
+    res2 = run_job(spark, seq_path, out, run_id="re", routes=routes)
+    assert res2["executed"] == [] and res2["counts"] == res["counts"]
+
+
+def test_failed_sink_write_then_resume(spark, seq_path, tmp_path, monkeypatch, clean_run):
+    """The second sink write raises; the rerun executes only the stages that
+    did not commit and reports the same counts as an uninterrupted run."""
+    import loongcollector_spark.plans.job as job
+
+    real_write, calls = job._write_sink, []
+
+    def flaky_write(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("killed")
+        return real_write(*args, **kwargs)
+
+    out = str(tmp_path / "jobk")
+    monkeypatch.setattr(job, "_write_sink", flaky_write)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_job(spark, seq_path, out, run_id="rk")
+    monkeypatch.undo()
+
+    committed = CheckpointLog(out + "/_checkpoint").stages("rk")
+    assert len(committed) == 1
+    res = run_job(spark, seq_path, out, run_id="rk")
+    clean = clean_run[1]
+    assert res["executed"] == [s for s in clean["executed"] if s not in committed]
+    assert res["counts"] == clean["counts"]
+    for name, path in res["sinks"].items():
+        assert spark.read.parquet(path).count() == res["counts"][name]["n_rows"]
+
+
+def test_fully_resumed_run_starts_no_spark_job(spark, seq_path, clean_run):
+    out, clean = clean_run
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-check", "fully resumed run_job")
+    try:
+        res = run_job(spark, seq_path, out, run_id="clean")
+        assert sc.statusTracker().getJobIdsForGroup("resume-check") == []
+        spark.range(3).collect()  # the group does tag jobs from this thread
+        assert sc.statusTracker().getJobIdsForGroup("resume-check")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res["executed"] == [] and res["counts"] == clean["counts"]

@@ -1,13 +1,16 @@
-"""Token codec: native and pandas decode agree; encode round-trips exactly
-(the per-row token-array-equality invariant depends on this)."""
+"""Token codec: the one decode path (``with_content`` /
+``decode_tokens_utf8``) matches the Python oracle and an Arrow-batched pandas
+reference decode; encode round-trips exactly (the per-row
+token-array-equality invariant depends on this)."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from loongcollector_spark.codec import (
-    decode_tokens_native,
-    decode_tokens_pandas,
     decode_tokens_utf8,
     encode_string_pandas,
     with_content,
@@ -15,22 +18,26 @@ from loongcollector_spark.codec import (
 from loongcollector_spark.oracle import decode as py_decode
 
 
-def test_native_matches_pandas(seq_df):
-    d = seq_df.withColumn("c1", decode_tokens_native("tokens")).withColumn(
-        "c2", decode_tokens_pandas(F.col("tokens"))
-    )
-    assert d.filter(F.col("c1") != F.col("c2")).count() == 0
+@pandas_udf(T.StringType())
+def _decode_pandas_reference(tokens: pd.Series) -> pd.Series:
+    """Reference decode: per-row ``bytes.decode`` in an Arrow-batched UDF."""
+    return tokens.map(lambda t: bytes(bytearray(int(x) & 0xFF for x in t)).decode("utf-8", "replace"))
 
 
 def test_decode_matches_python(seq_df):
-    rows = seq_df.withColumn("c", decode_tokens_native("tokens")).select("tokens", "c").head(50)
-    for r in rows:
-        assert r["c"] == py_decode(r["tokens"])
+    """Every corpus row, plain and strict, equals the Python oracle decode."""
+    d = with_content(seq_df).withColumn("strict", decode_tokens_utf8("tokens", strict=True))
+    bad = [
+        r["doc_id"]
+        for r in d.select("doc_id", "tokens", "content", "strict").collect()
+        if not r["content"] == r["strict"] == py_decode(r["tokens"])
+    ]
+    assert not bad, bad[:5]
 
 
 def test_utf8_hybrid_matches_pandas_on_corpus(seq_df):
     d = seq_df.withColumn("c1", decode_tokens_utf8("tokens")).withColumn(
-        "c2", decode_tokens_pandas(F.col("tokens"))
+        "c2", _decode_pandas_reference(F.col("tokens"))
     )
     assert d.filter(F.col("c1") != F.col("c2")).count() == 0
 
@@ -51,9 +58,10 @@ def test_utf8_hybrid_non_ascii(spark):
     )
     got = [r.c for r in df.withColumn("c", decode_tokens_utf8("tokens")).collect()]
     assert got == samples + [None]
-    # with_content default ("auto") routes to the same hybrid
-    got2 = [r.content for r in with_content(df).collect()]
-    assert got2 == samples + [None]
+    # with_content attaches the same decode, with or without the strict guard
+    for strict in (False, True):
+        got2 = [r.content for r in with_content(df, strict=strict).collect()]
+        assert got2 == samples + [None]
 
 
 def test_utf8_hybrid_stays_jvm_side(seq_df):
@@ -66,8 +74,8 @@ def test_utf8_hybrid_stays_jvm_side(seq_df):
 
 def test_round_trip(seq_df):
     d = (
-        seq_df.withColumn("c", decode_tokens_native("tokens"))
-        .withColumn("t2", encode_string_pandas(F.col("c")))
+        with_content(seq_df)
+        .withColumn("t2", encode_string_pandas(F.col("content")))
         .filter(F.col("t2") != F.col("tokens"))
     )
     assert d.count() == 0
@@ -87,18 +95,10 @@ def test_utf8_strict_contract(spark):
     bad = spark.createDataFrame([([104, 300],)], "tokens array<int>")
     with pytest.raises(Exception, match="byte contract"):
         bad.withColumn("c", decode_tokens_utf8("tokens", strict=True)).collect()
+    with pytest.raises(Exception, match="byte contract"):
+        with_content(bad, strict=True).collect()
     # the documented non-strict hazard: same row silently decodes to garbage
     assert bad.withColumn("c", decode_tokens_utf8("tokens")).collect()[0].c is not None
-
-
-def test_with_content_rejects_unknown_method(spark):
-    import pytest
-
-    from loongcollector_spark.codec import with_content
-
-    df = spark.createDataFrame([([104, 105],)], "tokens array<int>")
-    with pytest.raises(ValueError, match="unknown method"):
-        with_content(df, method="natiive")
 
 
 def test_strict_decode_flags_null_tokens(spark):
