@@ -6,8 +6,8 @@ core/collection_pipeline/queue/ExactlyOnceQueueManager.h:41) plus disk-buffered
 redelivery (core/plugin/flusher/sls/DiskBufferWriter.cpp). The Spark-native
 equivalent: each sink write is an atomic table commit (Iceberg snapshot in
 production; directory rename here), and a checkpoint log records, per
-``(run_id, stage)``: status, row/byte totals, and **per-partition lineage**
-(partition id → rows, bytes). A killed run re-invoked with the same ``run_id``
+``(run_id, stage)``: status, row/byte totals, and **per-file lineage**
+(output file → rows, bytes). A killed run re-invoked with the same ``run_id``
 skips every committed stage — nothing is reprocessed, matching "resumes from
 the last committed Iceberg snapshot".
 
@@ -28,7 +28,6 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _validate_run_id(run_id: str) -> str:
@@ -117,48 +116,12 @@ class CheckpointLog:
         return spark.read.option("multiLine", "true").json(self.root + "/*.json")
 
 
-def partition_lineage(df: DataFrame, bytes_col: str = "n_tok") -> list[dict]:
-    """Per-partition (rows, bytes) lineage of a DataFrame as it is currently
-    partitioned — one distributed pass, no collect of data rows."""
-    agg = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(bytes_col) if bytes_col in df.columns else F.lit(0)).alias("n_bytes"),
-        )
-        .collect()
-    )
-    return [
-        {"partition_id": r["partition_id"], "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
-        for r in agg
-    ]
-
-
-def file_lineage(spark: SparkSession, sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
-    """Per-output-file lineage of a written sink (file == sink-table partition
-    unit; the Iceberg manifest analog). Scans only the metadata columns."""
-    df = spark.read.parquet(sink_dir)
-    agg = (
-        df.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(bytes_col) if bytes_col in df.columns else F.lit(0)).alias("n_bytes"),
-        )
-        .collect()
-    )
-    return [
-        {"file": os.path.basename(r["file"]), "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
-        for r in agg
-    ]
-
-
 class ResumableRun:
     """Stage orchestrator: ``stage(name, fn)`` executes ``fn(stage_dir)`` only
     if ``(run_id, name)`` is not yet committed; ``fn`` writes into the
     in-progress dir, which is atomically renamed on success.
 
-    ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record
-    (``partitions`` may be None → file lineage is derived from the sink).
+    ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record.
     """
 
     def __init__(self, spark: SparkSession, out_root: str, run_id: str | None = None) -> None:
@@ -184,8 +147,6 @@ class ResumableRun:
         if os.path.exists(inprog):
             shutil.rmtree(final, ignore_errors=True)
             os.replace(inprog, final)  # the "snapshot commit"
-            if partitions is None:
-                partitions = file_lineage(self.spark, final)
         self.log.record(self.run_id, name, n_rows, n_bytes, partitions or [])
         self.executed.append(name)
         return final

@@ -8,8 +8,9 @@
   (core/collection_pipeline/route/Router.cpp:50-82): unconditional sinks always
   receive a copy; conditional sinks receive rows matching their Condition
   (event_type equality or tag equality, Condition.cpp:36-113). A row can go to
-  MULTIPLE sinks, so fan-out is one filtered write per sink over a cached
-  DataFrame — not ``partitionBy``.
+  MULTIPLE sinks: ``tag_sinks`` explodes each row to the index of every sink
+  it matches, which ``fan_out`` splits into one DataFrame per sink and
+  ``sources/io.py::write_sinks`` writes in one pass.
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+SINK_COL = "__sink"  # index of a row's sink in tag_sinks' output
 
 
 @dataclass(frozen=True)
@@ -89,10 +92,11 @@ def sink_predicate(cond: SinkCondition, df_cols: list[str]) -> Column:
     raise ValueError(f"unknown condition type {cond.type!r}")
 
 
-def fan_out(df: DataFrame, conditions: list[SinkCondition]) -> dict[str, DataFrame]:
-    """Router.cpp:50-82 multi-sink duplication: each sink gets the rows its
-    condition matches; a row may appear in several sinks. Caller should
-    ``df.persist()`` first so the routed plan is computed once."""
+def tag_sinks(df: DataFrame, conditions: list[SinkCondition]) -> DataFrame:
+    """Router.cpp:50-82 multi-sink duplication as one projection: each row is
+    exploded to the index (``__sink``) of every condition it matches, so a
+    row in k sinks becomes k rows. A ``tag`` condition with ``discard_tag``
+    removes the tag from its own copy only (Condition.cpp:62-113)."""
     dup = {c.sink for c in conditions if sum(x.sink == c.sink for x in conditions) > 1}
     if dup:
         raise ValueError(
@@ -100,10 +104,19 @@ def fan_out(df: DataFrame, conditions: list[SinkCondition]) -> dict[str, DataFra
             "condition would silently REPLACE the earlier one's rows; give "
             "each condition a distinct sink (or pre-merge the conditions)"
         )
-    out: dict[str, DataFrame] = {}
-    for c in conditions:
-        sunk = df.filter(sink_predicate(c, df.columns))
+    sink = F.col(SINK_COL)
+    matches = F.array(*[F.when(sink_predicate(c, df.columns), F.lit(i)) for i, c in enumerate(conditions)])
+    out = df.withColumn(SINK_COL, F.explode(F.filter(matches, lambda x: x.isNotNull())))
+    for i, c in enumerate(conditions):
         if c.type == "tag" and c.discard_tag:
-            sunk = sunk.withColumn("tags", F.map_filter(F.col("tags"), lambda k, _: k != F.lit(c.key)))
-        out[c.sink] = sunk
+            dropped = F.map_filter(F.col("tags"), lambda k, _: k != F.lit(c.key))
+            out = out.withColumn("tags", F.when(sink == i, dropped).otherwise(F.col("tags")))
     return out
+
+
+def fan_out(df: DataFrame, conditions: list[SinkCondition]) -> dict[str, DataFrame]:
+    """Each sink's rows as its own DataFrame; a row may appear in several
+    sinks. Caller should ``df.persist()`` first so the routed plan is computed
+    once (``sources/io.py::write_sinks`` writes all sinks in one pass)."""
+    tagged = tag_sinks(df, conditions)
+    return {c.sink: tagged.filter(F.col(SINK_COL) == i).drop(SINK_COL) for i, c in enumerate(conditions)}

@@ -16,6 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,7 +187,9 @@ def default_enrich(spark) -> "Callable[[DataFrame], DataFrame]":  # noqa: F821
     stage. The dict join is broadcast (zero shuffle of the fact side)."""
     from ..operators.enrich import desensitize_const, dict_map
 
-    dict_df = spark.createDataFrame(STATUS_CLASSES, "code string, cls string")
+    # from Arrow, so the dictionary is a LocalRelation, not a Python RDD
+    code, cls = zip(*STATUS_CLASSES)
+    dict_df = spark.createDataFrame(pa.table({"code": code, "cls": cls}))
 
     def _apply(df: DataFrame) -> DataFrame:
         df = dict_map(

@@ -3,13 +3,16 @@
 * ``read_sequences``  — the input_file / input_static_file analog: batch read of
   the tokenized-sequence table (Iceberg in production; parquet here — the code
   path is identical, ``format`` is a parameter).
-* ``write_fanout``    — the Router + flusher fan-out
-  (core/collection_pipeline/route/Router.cpp:50-82 and
-  core/plugin/flusher/*): one filtered write per sink over a persisted routed
-  DataFrame (a row may go to >1 sink, so partitionBy is wrong — SURVEY.md §7.4);
-  sink-affinity repartition on the salted key before each write.
-* ``write_routed_partitioned`` — fast path when sinks are DISJOINT (pure
-  row-level routing): single pass, ``partitionBy(route)``.
+* ``write_sinks``     — the Router + flusher fan-out
+  (core/collection_pipeline/route/Router.cpp:50-82 and core/plugin/flusher/*)
+  in one Spark pass: each row is exploded to the index of every sink it
+  matches (a row may go to >1 sink), counted, salted-repartitioned on the sink
+  index and written with ``partitionBy``; each sink is then committed on its
+  own by renaming its partition directory. ``write_fanout`` is its
+  plain-directory caller; ``plans/job.py::run_job`` commits each sink as a
+  checkpoint stage.
+* ``write_routed_partitioned`` — one ``partitionBy(route)`` write of a routed
+  DataFrame, sinks = ``route=<sink>`` directories.
 
 Iceberg notes: on a real cluster, swap ``format('parquet')`` for
 ``writeTo(table).append()`` on an Iceberg catalog — the snapshot commit is the
@@ -19,17 +22,57 @@ prepare/commit of the reference's exactly-once checkpoints
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import salted_repartition
-from ..operators.route import SinkCondition, fan_out
+from ..operators.route import SINK_COL, SinkCondition, tag_sinks
 
 
 def read_sequences(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(path)
+
+
+def _payload(df: DataFrame, keep_tokens: bool) -> DataFrame:
+    """Payload at the sink is the ``content`` string — byte-for-byte the token
+    payload (the codec is bijective, tokens are bytes), so routed-row
+    token-array equality stays exactly verifiable via re-encode while the sink
+    avoids parquet-encoding every token as an int32 (4× byte inflation,
+    measured 8× slower write). ``keep_tokens=True`` stores the raw int32 array
+    too."""
+    return df if keep_tokens or "content" not in df.columns else df.drop("tokens")
+
+
+def _write_partitioned(df: DataFrame, out_dir: str, part_col: str, num_partitions: int | None) -> None:
+    """One shuffle, one write, one directory per ``part_col`` value.
+
+    Salt on (part_col, hash(doc_id)): each task then holds rows of exactly ONE
+    sink, so partitionBy opens one parquet writer per task instead of one per
+    (task × sink) — concurrent row-group buffers are the write stage's memory
+    footprint (4 routes × 64 tasks × ~128MB blew up local[32]); the salt
+    spreads a hot sink over many tasks (sink-affinity sharding,
+    aggregator_shardhash.go:164-204 semantics). Falsy ``num_partitions``
+    keeps the input partitioning.
+
+    zstd: measured on the 600k-row routed write (local[32], /dev/shm) it is
+    BOTH faster than Spark's snappy default (1.56s vs 2.21s best) and 35%
+    smaller (27.6 vs 42.6 MB). maxRecordsPerFile bounds file size (the
+    Batcher/FlushStrategy analog, core/collection_pipeline/batch/FlushStrategy.h:31-104).
+    """
+    if num_partitions:
+        df = salted_repartition(df, num_partitions, source_col=part_col)
+    (
+        df.write.mode("overwrite")
+        .option("maxRecordsPerFile", 1_000_000)
+        .option("compression", "zstd")
+        .partitionBy(part_col)
+        .parquet(out_dir)
+    )
 
 
 def write_routed_partitioned(
@@ -37,87 +80,80 @@ def write_routed_partitioned(
     out_dir: str,
     route_col: str = "route",
     num_partitions: int | None = None,
-    salt_buckets: int = 64,
     keep_tokens: bool = False,
-    compression: str = "zstd",
 ) -> None:
-    """Disjoint-sink fast path: one shuffle, one write, sinks = directories.
-
-    ``compression`` defaults to zstd: measured on the 600k-row routed write
-    (local[32], /dev/shm) it is BOTH faster than Spark's snappy default
-    (1.56s vs 2.21s best) and 35% smaller (27.6 vs 42.6 MB) — at 100 TB the
-    size cut dominates downstream scan + storage cost, so there is no
-    speed/size trade to make.
-
-    The salted repartition keeps one hot source from serializing the shuffle;
-    maxRecordsPerFile bounds file size (the Batcher/FlushStrategy analog,
-    core/collection_pipeline/batch/FlushStrategy.h:31-104).
-
-    Payload at the sink is the ``content`` string — byte-for-byte the token
-    payload (the codec is bijective, tokens are bytes), so routed-row
-    token-array equality stays exactly verifiable via re-encode while the sink
-    avoids parquet-encoding every token as an int32 (4× byte inflation,
-    measured 8× slower write). ``keep_tokens=True`` stores the raw int32 array
-    too.
-    """
-    df = routed
-    if not keep_tokens and "tokens" in df.columns and "content" in df.columns:
-        df = df.drop("tokens")
-    if num_partitions:
-        # Salt on (route, hash(doc_id)): each task then holds rows of exactly
-        # ONE route, so partitionBy opens one parquet writer per task instead
-        # of one per (task × route) — concurrent row-group buffers are the
-        # write stage's memory footprint (4 routes × 64 tasks × ~128MB blew
-        # up local[32]); the salt spreads the hot route over many tasks
-        # (sink-affinity sharding, aggregator_shardhash.go:164-204 semantics).
-        df = salted_repartition(df, num_partitions, salt_buckets, source_col=route_col)
-    (
-        df.write.mode("overwrite")
-        .option("maxRecordsPerFile", 1_000_000)
-        .option("compression", compression)
-        .partitionBy(route_col)
-        .parquet(out_dir)
-    )
+    """Disjoint sinks (pure row-level routing): sinks = ``route=<sink>``
+    directories of one partitioned write."""
+    _write_partitioned(_payload(routed, keep_tokens), out_dir, route_col, num_partitions)
 
 
-def write_fanout(
+def write_sinks(
     routed: DataFrame,
-    out_dir: str,
+    out_root: str,
     conditions: list[SinkCondition],
-    fmt: str = "parquet",
-    compression: str = "zstd",
-) -> dict[str, str]:
-    """Multi-sink duplication writer: persist once, one filtered write per sink.
+    commit: Callable[[str, Callable[[str], tuple]], object],
+    num_partitions: int | None = None,
+    keep_tokens: bool = False,
+) -> None:
+    """Write every sink in one Spark pass, then commit each sink on its own.
 
-    Caching the routed plan means the parse stage runs once, not once per sink
-    (SURVEY.md §7.4 'Multi-sink duplication'). The per-sink writes are issued
-    CONCURRENTLY (Spark actions are thread-safe; concurrent jobs share the
-    executors) — sequential writes pay every job's straggler tail back-to-back,
-    while concurrent ones overlap tail with the next sink's scan, which is the
-    difference between ~1× and ~Nsinks× write wall on a 1000-executor cluster.
-    zstd sink default — see write_routed_partitioned.
+    ``tag_sinks`` explodes each row to the index of every sink whose
+    condition it matches: a row in k sinks becomes k rows, the same bytes as
+    k filtered writes, from one scan and no cache (Router.cpp:50-82). One
+    ``Observation`` counts every sink, and one partitioned write puts sink i
+    under ``__sink=<i>`` of a scratch dir (the index, not the name: partition
+    values are escaped in directory names); one read-back gives every sink's
+    file lineage.
+
+    ``commit(sink, fn)`` is called once per sink, in ``conditions`` order;
+    ``fn(dest)`` moves that sink's files to ``dest`` (an empty table with the
+    sink schema if no row matched) and returns ``(n_rows, n_tok_sum,
+    file_lineage)``.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    scratch = os.path.join(out_root, "_sinks.scratch")
+    shutil.rmtree(scratch, ignore_errors=True)  # rows of an earlier failed attempt
+    df = _payload(routed, keep_tokens)
+    tok = F.col("n_tok") if "n_tok" in df.columns else F.lit(0)
+    sink = F.col(SINK_COL)
+    obs = Observation()
+    tagged = tag_sinks(df, conditions).observe(obs, *[
+        agg for i in range(len(conditions)) for agg in (
+            F.count_if(sink == i).alias(f"n_rows_{i}"),
+            F.coalesce(F.sum(F.when(sink == i, tok)), F.lit(0)).alias(f"n_tok_{i}"),
+        )
+    ])
+    _write_partitioned(tagged, scratch, SINK_COL, num_partitions)
+    m = obs.get
+    counts = [(int(m[f"n_rows_{i}"]), int(m[f"n_tok_{i}"])) for i in range(len(conditions))]
+    lineage: dict[int, list[dict]] = {}  # per-file: the Iceberg manifest analog
+    if any(n for n, _ in counts):
+        # read back with the written schema (no inference job), metadata columns only
+        out = routed.sparkSession.read.schema(tagged.schema).parquet(scratch)
+        files = out.groupBy(SINK_COL, F.input_file_name().alias("file")).agg(
+            F.count(F.lit(1)).alias("n_rows"), F.sum(tok).alias("n_bytes")
+        )
+        for r in files.collect():
+            lineage.setdefault(r[SINK_COL], []).append(
+                {"file": os.path.basename(r["file"]), "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
+            )
 
-    # Spark persistence is not ref-counted: if the CALLER already persisted
-    # this plan, persisting+unpersisting here would evict their cache. Only
-    # manage the lifecycle for a plan we cached ourselves.
-    we_persisted = not routed.storageLevel.useMemory and not routed.storageLevel.useDisk
-    if we_persisted:
-        routed = routed.persist()
+    def _move(i: int, dest: str) -> tuple[int, int, list[dict]]:
+        if i in lineage:
+            os.replace(os.path.join(scratch, f"{SINK_COL}={i}"), dest)
+        else:
+            df.limit(0).write.parquet(dest)  # an empty LocalRelation: no scan
+        return (*counts[i], lineage.get(i, []))
 
-    def _write(sink: str, df: DataFrame) -> tuple[str, str]:
-        path = os.path.join(out_dir, sink)
-        w = df.write.mode("overwrite").format(fmt)
-        if fmt == "parquet":
-            w = w.option("compression", compression)
-        w.save(path)
-        return sink, path
+    for i, c in enumerate(conditions):
+        commit(c.sink, functools.partial(_move, i))
+    shutil.rmtree(scratch, ignore_errors=True)
 
-    try:
-        sinks = fan_out(routed, conditions)
-        with ThreadPoolExecutor(max_workers=min(8, max(1, len(sinks)))) as ex:
-            return dict(ex.map(lambda kv: _write(*kv), sinks.items()))
-    finally:
-        if we_persisted:
-            routed.unpersist()
+
+def write_fanout(routed: DataFrame, out_dir: str, conditions: list[SinkCondition]) -> dict[str, str]:
+    """Multi-sink duplication writer: every sink in one pass (``write_sinks``),
+    each sink committed to ``out_dir/<sink>``, replacing what was there."""
+    paths = {c.sink: os.path.join(out_dir, c.sink) for c in conditions}
+    for path in paths.values():
+        shutil.rmtree(path, ignore_errors=True)
+    write_sinks(routed, out_dir, conditions, lambda name, fn: fn(paths[name]))
+    return paths

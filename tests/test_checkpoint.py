@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from loongcollector_spark.checkpoint import CheckpointLog, ResumableRun
+from loongcollector_spark.operators.route import SINK_COL, SinkCondition
 from loongcollector_spark.plans.job import run_job
 from loongcollector_spark.synth import ensure_sequences
 
@@ -37,7 +38,7 @@ def test_full_run_commits_all_sinks(spark, seq_path, tmp_path):
         assert sum(p["n_bytes"] for p in rec["partitions"]) == rec["n_bytes"]
     crec = log.read("r1", "counts")
     assert crec["n_rows"] == 5000
-    assert len(crec["partitions"]) > 0  # per-partition lineage of the routed data
+    assert len(crec["partitions"]) > 0  # the union of the sink file lineages
     # sink contents match the counts
     for name, path in res["sinks"].items():
         assert spark.read.parquet(path).count() == res["counts"][name]["n_rows"]
@@ -196,20 +197,22 @@ def test_route_without_rows_commits_empty_sink(spark, seq_path, tmp_path):
 
 
 def test_failed_sink_write_then_resume(spark, seq_path, tmp_path, monkeypatch, clean_run):
-    """The second sink write raises; the rerun executes only the stages that
-    did not commit and reports the same counts as an uninterrupted run."""
-    import loongcollector_spark.plans.job as job
+    """The second sink commit (the rename of its written files) raises; the
+    rerun executes only the stages that did not commit and reports the same
+    counts as an uninterrupted run."""
+    import os
 
-    real_write, calls = job._write_sink, []
+    real_replace, calls = os.replace, []
 
-    def flaky_write(*args, **kwargs):
-        calls.append(1)
-        if len(calls) == 2:
-            raise RuntimeError("killed")
-        return real_write(*args, **kwargs)
+    def flaky_replace(src, dst, *args, **kwargs):
+        if f"{SINK_COL}=" in os.fspath(src):
+            calls.append(src)
+            if len(calls) == 2:
+                raise RuntimeError("killed")
+        return real_replace(src, dst, *args, **kwargs)
 
     out = str(tmp_path / "jobk")
-    monkeypatch.setattr(job, "_write_sink", flaky_write)
+    monkeypatch.setattr(os, "replace", flaky_replace)
     with pytest.raises(RuntimeError, match="killed"):
         run_job(spark, seq_path, out, run_id="rk")
     monkeypatch.undo()
@@ -222,6 +225,126 @@ def test_failed_sink_write_then_resume(spark, seq_path, tmp_path, monkeypatch, c
     assert res["counts"] == clean["counts"]
     for name, path in res["sinks"].items():
         assert spark.read.parquet(path).count() == res["counts"][name]["n_rows"]
+
+
+def test_failed_one_pass_write_then_resume(spark, seq_path, tmp_path, monkeypatch, clean_run):
+    """The one-pass write itself fails part way: no sink commits, and the
+    rerun's leftover scratch rows (planted as a killed process would leave
+    them) do not leak into any sink."""
+    import glob
+    import os
+    import shutil
+
+    import loongcollector_spark.sources.io as io
+
+    real_repartition = io.salted_repartition
+
+    def failing_repartition(df, *args, **kwargs):
+        doomed = F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 3  # a fifth of the rows fail the write stage
+        return real_repartition(df, *args, **kwargs).filter(
+            F.assert_true(~doomed, "killed").isNull())
+
+    out = str(tmp_path / "jobw")
+    monkeypatch.setattr(io, "salted_repartition", failing_repartition)
+    with pytest.raises(Exception, match="killed"):
+        run_job(spark, seq_path, out, run_id="rw")
+    monkeypatch.undo()
+    assert CheckpointLog(out + "/_checkpoint").stages("rw") == []
+
+    clean = clean_run[1]
+    for i in range(len(clean["sinks"])):
+        leftover = os.path.join(out, "_sinks.scratch", f"{SINK_COL}={i}")
+        os.makedirs(leftover, exist_ok=True)
+        for f in glob.glob(os.path.join(clean["sinks"]["sink_nginx"], "*.parquet")):
+            shutil.copy(f, os.path.join(leftover, "leftover-" + os.path.basename(f)))
+    res = run_job(spark, seq_path, out, run_id="rw")
+    assert res["executed"] == clean["executed"]
+    assert res["counts"] == clean["counts"]
+    for name, path in res["sinks"].items():
+        got = {r.doc_id for r in spark.read.parquet(path).select("doc_id").collect()}
+        want = {r.doc_id for r in spark.read.parquet(clean["sinks"][name]).select("doc_id").collect()}
+        assert got == want and len(got) == res["counts"][name]["n_rows"]
+    assert not os.path.exists(os.path.join(out, "_sinks.scratch"))
+
+
+OVERLAPPING = [
+    SinkCondition(sink="audit", type="always"),
+    SinkCondition(sink="nginx", type="route", value="sink_nginx"),
+    SinkCondition(sink="default", type="route", value="sink_default"),
+]
+
+
+def _sink_contents(spark, res) -> dict:
+    return {
+        name: sorted((r.doc_id, r.content) for r in spark.read.parquet(path).select("doc_id", "content").collect())
+        for name, path in res["sinks"].items()
+    }
+
+
+def test_overlapping_sinks_match_independent_filters(spark, seq_path, tmp_path):
+    """An ``always`` sink plus route sinks: each committed sink holds exactly
+    the rows of an independent filter of the routed plan, its counts are that
+    filter's counts, and the counts stage lineage adds up to the counts
+    record (the sum over sinks, not the input row count)."""
+    from loongcollector_spark.operators.route import sink_predicate
+    from loongcollector_spark.plans.pipeline import build_pipeline, default_enrich
+
+    out = str(tmp_path / "jobo")
+    res = run_job(spark, seq_path, out, run_id="ro", conditions=OVERLAPPING)
+    routed = build_pipeline(spark.read.parquet(seq_path), enrich=default_enrich(spark))
+    for c in OVERLAPPING:
+        want = routed.filter(sink_predicate(c, routed.columns))
+        want_ids = {r.doc_id for r in want.select("doc_id").collect()}
+        got_ids = [r.doc_id for r in spark.read.parquet(res["sinks"][c.sink]).select("doc_id").collect()]
+        assert sorted(got_ids) == sorted(want_ids)
+        n_tok = want.agg(F.sum("n_tok")).first()[0]
+        assert res["counts"][c.sink] == {"n_rows": len(want_ids), "n_tok_sum": n_tok}
+
+    crec = CheckpointLog(out + "/_checkpoint").read("ro", "counts")
+    assert crec["n_rows"] == sum(v["n_rows"] for v in res["counts"].values()) > 5000
+    assert sum(p["n_rows"] for p in crec["partitions"]) == crec["n_rows"]
+    assert sum(p["n_bytes"] for p in crec["partitions"]) == crec["n_bytes"]
+
+
+def test_sinks_do_not_depend_on_parallelism(spark, seq_path, tmp_path):
+    """Committed sink contents and counts are identical whether the one-pass
+    write runs as 1 task or 8."""
+    res = {
+        n: run_job(spark, seq_path, str(tmp_path / f"p{n}"), run_id=f"p{n}",
+                   conditions=OVERLAPPING, num_partitions=n)
+        for n in (1, 8)
+    }
+    assert res[1]["counts"] == res[8]["counts"]
+    assert _sink_contents(spark, res[1]) == _sink_contents(spark, res[8])
+
+
+def test_duplicate_sink_names_rejected(spark, seq_path, tmp_path):
+    with pytest.raises(ValueError, match="duplicate sink"):
+        run_job(spark, seq_path, str(tmp_path / "jobd"), run_id="rd", conditions=[
+            SinkCondition(sink="s", type="always"),
+            SinkCondition(sink="s", type="route", value="sink_nginx"),
+        ])
+
+
+def _jobs_started(sc, group: str, fn):
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_fresh_run_starts_at_most_eight_spark_jobs(spark, seq_path, tmp_path):
+    """Every sink is written in one pass: a fresh run is a fixed handful of
+    Spark jobs, not a filter/write/lineage round per sink."""
+    sc = spark.sparkContext
+    res, jobs = _jobs_started(sc, "fresh-run", lambda: run_job(spark, seq_path, str(tmp_path / "j"), run_id="rj"))
+    assert len(res["executed"]) == 5
+    assert 0 < len(jobs) <= 8, jobs
+    # positive control: the group does count jobs started in a loop
+    _, control = _jobs_started(sc, "control", lambda: [spark.range(3).collect() for _ in range(9)])
+    assert len(control) >= 9
 
 
 def test_fully_resumed_run_starts_no_spark_job(spark, seq_path, clean_run):

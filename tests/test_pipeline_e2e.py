@@ -109,6 +109,28 @@ def test_multi_sink_duplication(spark, seq_df, tmp_path):
     )
 
 
+def test_fanout_tag_discard_only_in_its_sink(spark, tmp_path):
+    """Condition.cpp:62-113 DiscardingTag: the tag sink's copy loses the tag,
+    the same row's copy in an ``always`` sink keeps it."""
+    from loongcollector_spark.operators.route import SinkCondition
+    from loongcollector_spark.sources.io import write_fanout
+
+    df = spark.createDataFrame(
+        [("a", {"env": "prod", "k": "1"}, 3), ("b", {"env": "dev", "k": "2"}, 4)],
+        "doc_id string, tags map<string,string>, n_tok int",
+    )
+    paths = write_fanout(df, str(tmp_path), [
+        SinkCondition(sink="all", type="always"),
+        SinkCondition(sink="prod", type="tag", key="env", value="prod", discard_tag=True),
+    ])
+    tags = {
+        sink: {r.doc_id: r.tags for r in spark.read.parquet(path).collect()}
+        for sink, path in paths.items()
+    }
+    assert tags["prod"] == {"a": {"k": "1"}}
+    assert tags["all"] == {"a": {"env": "prod", "k": "1"}, "b": {"env": "dev", "k": "2"}}
+
+
 def test_enriched_pipeline_matches_oracle(spark, seq_df, seq_path):
     """decode → parse → ENRICH (broadcast dict-map + desensitize) → route,
     fields compared exactly vs the python oracle's enrich model."""
